@@ -174,10 +174,8 @@ object Dedup {
     // each source tags its jobs (thread-local; SQLExecution propagates it
     // into AQE stage-materialization jobs) so listeners/UIs can attribute
     // every stage to its candidate source
-    def tagged[A](name: String)(body: => A): A = {
-      spark.sparkContext.setJobDescription(s"graft:source:$name")
-      try body finally spark.sparkContext.setJobDescription(null)
-    }
+    def tagged[A](name: String)(body: => A): A =
+      graft.util.JobDescription(spark, s"graft:source:$name")(body)
     val tasks: Seq[Future[(DataFrame, Option[DataFrame])]] = Seq(
       Future { tagged("exact") {
         (graft.util.Seal(Candidates.exactEdges(keyed, "iid", "key")), None)
